@@ -15,8 +15,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from priority_data_pipeline_postgres_db_spark.functions import text as _txt
+from priority_data_pipeline_postgres_db_spark.operators import corpus as _cp
+from priority_data_pipeline_postgres_db_spark.operators import dedup as _dd
+from priority_data_pipeline_postgres_db_spark.operators import multimodal as _mm
+from priority_data_pipeline_postgres_db_spark.operators import similarity as _sim
 from priority_data_pipeline_postgres_db_spark.plans import analytics as _an
 from priority_data_pipeline_postgres_db_spark.plans import queries as _q
+from priority_data_pipeline_postgres_db_spark.plans import reporting as _rp
+from priority_data_pipeline_postgres_db_spark.streaming import incremental as _st
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 
@@ -73,49 +80,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     catalog: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     catalog.update(_q.CORE_QUERIES)
-    catalog.update(_an.QUERIES)
-    try:  # beyond-reference operator sets land module by module
-        from priority_data_pipeline_postgres_db_spark.operators import dedup as _dd
-
-        catalog.update(_dd.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.operators import similarity as _sim
-
-        catalog.update(_sim.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.functions import text as _txt
-
-        catalog.update(_txt.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.operators import multimodal as _mm
-
-        catalog.update(_mm.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.operators import corpus as _cp
-
-        catalog.update(_cp.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.streaming import incremental as _st
-
-        catalog.update(_st.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.plans import reporting as _rp
-
-        catalog.update(_rp.QUERIES)
-    except ImportError:
-        pass
+    for mod in (_an, _dd, _sim, _txt, _mm, _cp, _st, _rp):
+        catalog.update(mod.QUERIES)
     # Ordering: unverified entries first (new operators land here
     # automatically, in registration order), then the verified tail
     # sorted stalest-first by (last-verified round, key).
@@ -145,19 +111,6 @@ def oracle_sql() -> dict[str, str]:
     semantics aren't SQL-expressible — driver does a rows-only check)."""
     oracle: dict[str, str] = {}
     oracle.update(_q.ORACLE)
-    oracle.update(_an.ORACLE)
-    for mod_path, attr in (
-        ("priority_data_pipeline_postgres_db_spark.operators.dedup", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.operators.similarity", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.functions.text", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.operators.corpus", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.streaming.incremental", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.plans.reporting", "ORACLE"),
-    ):
-        try:
-            import importlib
-
-            oracle.update(getattr(importlib.import_module(mod_path), attr))
-        except ImportError:
-            pass
+    for mod in (_an, _dd, _sim, _txt, _cp, _st, _rp):
+        oracle.update(mod.ORACLE)
     return oracle

@@ -27,6 +27,7 @@ engine-portable).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -2364,11 +2365,11 @@ def pq_codebooks_memo(
 ) -> np.ndarray:
     """Fit-once-per-(corpus, quantizer, geometry) PQ codebooks, persisted
     through the staging protocol exactly like ``ivf_centroids_memo``:
-    ``cents=None`` memoizes ``fit_pq_codebooks``; with coarse centroids
-    it memoizes ``fit_residual_codebooks`` keyed additionally by the
-    centroid bytes (books fit against different coarse quantizers must
-    never share).  Both fits are deterministic, so memo-vs-refit is
-    bit-identical.  In-memory frames (no fingerprint) bypass."""
+    memoizes ``fit_pq_codebooks``, keyed additionally by the coarse
+    centroid bytes when ``cents`` is given (residual books fit against
+    different coarse quantizers must never share).  The fit is
+    deterministic, so memo-vs-refit is bit-identical.  In-memory frames
+    (no fingerprint) bypass."""
     import hashlib
 
     from ..util import scratch_dir
@@ -2381,9 +2382,7 @@ def pq_codebooks_memo(
     if fp is None:
         fp = _emb_fingerprint(emb)
     if fp is None:
-        if cents is None:
-            return fit_pq_codebooks(emb, m, k_codes, sample_n, iters)
-        return fit_residual_codebooks(emb, cents, m, k_codes, sample_n, iters)
+        return fit_pq_codebooks(emb, m, k_codes, sample_n, iters, cents=cents)
     cdigest = (
         None if cents is None else hashlib.md5(np.ascontiguousarray(cents).tobytes()).hexdigest()
     )
@@ -2391,10 +2390,7 @@ def pq_codebooks_memo(
     root = _PQBOOK_ARTIFACTS.get(key)
     spark = emb.sparkSession
     if root is None:
-        if cents is None:
-            books = fit_pq_codebooks(emb, m, k_codes, sample_n, iters)
-        else:
-            books = fit_residual_codebooks(emb, cents, m, k_codes, sample_n, iters)
+        books = fit_pq_codebooks(emb, m, k_codes, sample_n, iters, cents=cents)
         root = scratch_dir("spark_graft_pqbooks_")
         wh = StagingWarehouse(spark, root)
         wh.write(_books_to_df(spark, books), "books_codebooks", incremental=False)
@@ -3792,6 +3788,7 @@ def fit_pq_codebooks(
     k_codes: int = PQ_K,
     sample_n: int = PQ_SAMPLE,
     iters: int = PQ_ITERS,
+    cents: np.ndarray | None = None,
 ) -> np.ndarray:
     """Per-subspace Lloyd k-means on a bounded deterministic sample —
     the PQ codebooks, fit exactly the way `fit_ivf_centroids` fits the
@@ -3799,6 +3796,12 @@ def fit_pq_codebooks(
     points, empty clusters keep their previous centroid, no RNG state).
     Vectors are unit-normalized BEFORE slicing so the ADC dot decomposes
     the cosine: cos(q, x) = Σ_s q_s · x_s ≈ Σ_s q_s · c[s, code_s(x)].
+
+    With coarse centroids ``cents`` the books are fit on RESIDUALS (the
+    normalized vector minus its nearest centroid) — the IVFPQ codebooks:
+    one shared set across lists (the standard IVFPQ memory trade:
+    k_clusters × private codebooks would overfit the per-list sample
+    anyway).  Without them the residual is the vector itself.
     Returns an (m, k_codes, dim/m) float64 array."""
     sample = (
         emb.select("vec_id", quantize_expr().alias("q"))
@@ -3810,6 +3813,8 @@ def fit_pq_codebooks(
         np.float64
     )
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    if cents is not None:
+        X = X - cents[(X @ cents.T).argmax(axis=1)]
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"m={m} must divide dim={dim} (use plan_pq)")
@@ -3818,19 +3823,19 @@ def fit_pq_codebooks(
     books = np.empty((m, k_codes, dsub), dtype=np.float64)
     for s in range(m):
         sub = X[:, s * dsub : (s + 1) * dsub]
-        cents = sub[:k_codes].copy()
-        c2 = (cents * cents).sum(axis=1)
+        cbs = sub[:k_codes].copy()
+        c2 = (cbs * cbs).sum(axis=1)
         for _ in range(iters):
             # ||x-c||² = ||x||² − 2x·c + ||c||²; ||x||² is constant per
             # row so the argmin needs only the last two terms
-            d2 = c2[None, :] - 2.0 * (sub @ cents.T)
+            d2 = c2[None, :] - 2.0 * (sub @ cbs.T)
             assign = d2.argmin(axis=1)  # first-min ties → deterministic
             for c in range(k_codes):
                 members = sub[assign == c]
                 if len(members):
-                    cents[c] = members.mean(axis=0)
-            c2 = (cents * cents).sum(axis=1)
-        books[s] = cents
+                    cbs[c] = members.mean(axis=0)
+            c2 = (cbs * cbs).sum(axis=1)
+        books[s] = cbs
     return books
 
 
@@ -3984,7 +3989,7 @@ def build_pq_index(
     wh.write(_books_to_df(spark, books), f"{table}_codebooks", incremental=False)
     # training-distribution quantization error: the drift baseline
     # pq_append compares new batches against (the ivfpq_append twin)
-    train_mse = _pq_quant_mse(emb, books)
+    train_mse = _quant_mse(emb, books)
     wh.write(
         spark.createDataFrame(
             [("train_quant_mse", float(train_mse))], "metric string, value double"
@@ -4022,12 +4027,20 @@ def _quant_mse_key(
     return (fp, cd, bd, sample_n)
 
 
-def _pq_quant_mse(emb: DataFrame, books: np.ndarray, sample_n: int = PQ_SAMPLE) -> float:
-    """Mean squared PQ reconstruction error over a bounded deterministic
-    sample — the plain-PQ twin of ``_residual_quant_mse`` (no coarse
-    quantizer: the error is ||x − x̂||² of the unit-normalized vector
-    against its per-subspace nearest codes)."""
-    key = _quant_mse_key(emb, None, books, sample_n)
+def _quant_mse(
+    emb: DataFrame,
+    books: np.ndarray,
+    cents: np.ndarray | None = None,
+    sample_n: int = PQ_SAMPLE,
+) -> float:
+    """Mean squared quantization error over a bounded deterministic
+    sample (the fit's own xxhash64 sample discipline): per vector, the
+    L2² gap between its residual (unit-normalized vector minus its
+    top-1 coarse centroid, or the vector itself when ``cents`` is None)
+    and that residual's PQ reconstruction.  THE code-health number: it
+    rises exactly when incoming vectors stop looking like the
+    distribution the frozen quantizers were trained on."""
+    key = _quant_mse_key(emb, cents, books, sample_n)
     if key is not None and key in _QUANT_MSE_MEMO:
         return _QUANT_MSE_MEMO[key]
     sample = (
@@ -4040,6 +4053,8 @@ def _pq_quant_mse(emb: DataFrame, books: np.ndarray, sample_n: int = PQ_SAMPLE) 
         return 0.0
     X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.float64)))
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    if cents is not None:
+        X = X - cents[np.argmax(X @ cents.T, axis=1)]
     m, _, dsub = books.shape
     b2 = (books * books).sum(axis=2)
     err = 0.0
@@ -4078,7 +4093,7 @@ def pq_append(
     encode = pq_encode_udf(books)
     codes = emb_new.select("vec_id", encode(quantize_expr()).alias("codes"))
     report = wh.write(codes, table, incremental=True, batch_id=batch_id)
-    new_mse = _pq_quant_mse(emb_new, books)
+    new_mse = _quant_mse(emb_new, books)
     train_mse, baseline = _load_train_mse(wh, table)
     ratio = new_mse / train_mse if train_mse > 0 else float("inf")
     return {
@@ -4288,53 +4303,6 @@ QUERIES["sim_pq_recall_curve"] = sim_pq_recall_curve
 IVFPQ_RERANK = 16  # exact re-rank depth = IVFPQ_RERANK × k
 
 
-def fit_residual_codebooks(
-    emb: DataFrame,
-    cents: np.ndarray,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    sample_n: int = PQ_SAMPLE,
-    iters: int = PQ_ITERS,
-) -> np.ndarray:
-    """PQ codebooks fit on RESIDUALS (unit-normalized sample vector minus
-    its nearest coarse centroid) — the same capped deterministic sample
-    and RNG-free Lloyd as `fit_pq_codebooks`, shifted into residual
-    space.  One shared codebook set across lists (the standard IVFPQ
-    memory trade: k_clusters × private codebooks would overfit the
-    per-list sample anyway)."""
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.int64))).astype(
-        np.float64
-    )
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-    R = X - cents[(X @ cents.T).argmax(axis=1)]
-    dim = R.shape[1]
-    if dim % m:
-        raise ValueError(f"m={m} must divide dim={dim} (use plan_pq)")
-    dsub = dim // m
-    k_codes = min(k_codes, len(R))
-    books = np.empty((m, k_codes, dsub), dtype=np.float64)
-    for s in range(m):
-        sub = R[:, s * dsub : (s + 1) * dsub]
-        cbs = sub[:k_codes].copy()
-        c2 = (cbs * cbs).sum(axis=1)
-        for _ in range(iters):
-            d2 = c2[None, :] - 2.0 * (sub @ cbs.T)
-            assign = d2.argmin(axis=1)
-            for c in range(k_codes):
-                members = sub[assign == c]
-                if len(members):
-                    cbs[c] = members.mean(axis=0)
-            c2 = (cbs * cbs).sum(axis=1)
-        books[s] = cbs
-    return books
-
-
 def ivfpq_encode_udf(cents: np.ndarray, books: np.ndarray, n_assign: int = IVF_N_ASSIGN):
     """pandas UDF: quantized vector → its spill-assigned postings, an
     array of (label, codes) structs — one struct per assigned list, each
@@ -4430,52 +4398,12 @@ def build_ivfpq_index(
     wh.write(_books_to_df(spark, books), f"{table}_codebooks", incremental=False)
     # training-distribution quantization error: the drift baseline
     # ivfpq_append compares new batches against (VERDICT r11 #5)
-    train_mse = _residual_quant_mse(emb, cents, books)
+    train_mse = _quant_mse(emb, books, cents)
     stats_df = spark.createDataFrame(
         [("train_quant_mse", float(train_mse))], "metric string, value double"
     )
     wh.write(stats_df, f"{table}_stats", incremental=False)
     return cents, books
-
-
-def _residual_quant_mse(
-    emb: DataFrame, cents: np.ndarray, books: np.ndarray, sample_n: int = PQ_SAMPLE
-) -> float:
-    """Mean squared residual-quantization error over a bounded
-    deterministic sample (the fit's own xxhash64 sample discipline):
-    per vector, the L2² gap between its top-1-list residual and that
-    residual's PQ reconstruction.  THE code-health number: it rises
-    exactly when incoming vectors stop looking like the distribution
-    the frozen codebooks were trained on."""
-    key = _quant_mse_key(emb, cents, books, sample_n)
-    if key is not None and key in _QUANT_MSE_MEMO:
-        return _QUANT_MSE_MEMO[key]
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    if len(sample) == 0:
-        return 0.0
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.float64)))
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-    lab = np.argmax(X @ cents.T, axis=1)
-    resid = X - cents[lab]
-    m, _, dsub = books.shape
-    b2 = (books * books).sum(axis=2)
-    err = 0.0
-    for s in range(m):
-        sub = resid[:, s * dsub : (s + 1) * dsub]
-        d2 = b2[s][None, :] - 2.0 * (sub @ books[s].T)
-        codes = d2.argmin(axis=1)
-        err += ((sub - books[s][codes]) ** 2).sum()
-    out = float(err / len(X))
-    if key is not None:
-        if len(_QUANT_MSE_MEMO) > 512:
-            _QUANT_MSE_MEMO.clear()  # crude bound; refills on demand
-        _QUANT_MSE_MEMO[key] = out
-    return out
 
 
 def ivfpq_append(
@@ -4521,7 +4449,7 @@ def ivfpq_append(
     report = wh.write(
         postings, table, incremental=True, partition_by=["label"], batch_id=batch_id
     )
-    new_mse = _residual_quant_mse(emb_new, cents, books)
+    new_mse = _quant_mse(emb_new, books, cents)
     train_mse, baseline = _load_train_mse(wh, table)
     ratio = new_mse / train_mse if train_mse > 0 else float("inf")
     return {
@@ -4657,7 +4585,7 @@ def ivfpq_topk(
     """In-memory IVFPQ lifecycle (fit + encode + query in one plan) —
     the same stage functions as the persisted path."""
     cents = fit_ivf_centroids(emb, k_clusters)
-    books = fit_residual_codebooks(emb, cents, m, k_codes)
+    books = fit_pq_codebooks(emb, m, k_codes, cents=cents)
     encode = ivfpq_encode_udf(cents, books)
     postings = (
         emb.select("vec_id", encode(quantize_expr()).alias("postings"))
@@ -4750,19 +4678,22 @@ QUERIES["sim_ivfpq_append"] = sim_ivfpq_append
 # ---------------------------------------------------------------------------
 # Versioned index generations: drift-triggered refit-and-swap (VERDICT r12 #2)
 # ---------------------------------------------------------------------------
-# ``ivfpq_append`` keeps an index CURRENT under growth, and its drift
-# instrument says WHEN the frozen quantizers have aged out — but acting on
-# ``refit_recommended`` needs machinery: at 100 TB a refit re-trains and
-# re-encodes for hours BESIDE live queries, so the new index must build
-# under a different name and become visible in one atomic act.  The index
+# ``ivfpq_append`` / ``pq_append`` keep an index CURRENT under growth,
+# and their drift instrument says WHEN the frozen quantizers have aged
+# out — but acting on ``refit_recommended`` needs machinery: at 100 TB a
+# refit re-trains and re-encodes for hours BESIDE live queries, so the
+# new index must build under a different name and become visible in one
+# atomic act.  The index
 # artifact is therefore VERSIONED: generation g lives in physical tables
-# ``<table>__g000g`` (postings + centroids + codebooks + stats), and
+# ``<table>__g000g`` (postings or codes + quantizers + stats), and
 # "current" is published through the ControlStore artifact log — one
 # append to the atomically-replaced control file repoints every reader
 # (the staging-manifest CURRENT discipline, applied to whole indexes).
 # Readers resolve the pointer per query; a query planned against the old
 # generation keeps reading its (still-present) tables; superseded
 # generations are reaped AFTER the swap by ``expire_index_generations``.
+# One lifecycle serves both codecs (``_CODECS``): the generation-1 build
+# names the codec and the pointer carries it to every later step.
 
 ANN_INDEX_KIND = "ann_index_generation"
 
@@ -4777,14 +4708,70 @@ def current_index_generation(control, table: str = "ivfpq_index") -> dict | None
     return control.latest_artifact(ANN_INDEX_KIND, table)
 
 
+@dataclass(frozen=True)
+class _Codec:
+    """One quantizer family of the versioned lifecycle: how a generation
+    is built, grown, queried and bin-packed.  Physical names, the
+    pointer, expiry and the maintenance turn are codec-blind."""
+
+    build: Callable  # (emb, wh, table, k_clusters, m, k_codes)
+    append: Callable  # (emb_new, wh, table, *, batch_id, drift_refit_ratio)
+    topk: Callable  # (wh, emb, queries, table, k, nprobe, rerank)
+    compact: dict  # rewrite_compact_files layout
+
+
+# the plain code table has no label partitioning — the ADC scan reads
+# the whole table — so its compaction bound is a flat file count
+PQ_COMPACT_FILES = 16
+
+_CODECS = {
+    "ivfpq": _Codec(
+        build_ivfpq_index, ivfpq_append, ivfpq_topk_persisted, {"partition_by": ["label"]}
+    ),
+    "pq": _Codec(
+        lambda emb, wh, table, k_clusters, m, k_codes: build_pq_index(
+            emb, wh, table=table, m=m, k_codes=k_codes
+        ),
+        pq_append,
+        lambda wh, emb, queries, table, k, nprobe, rerank: pq_topk_persisted(
+            wh, emb, queries, table=table, k=k, rerank=rerank
+        ),
+        {"n_files": PQ_COMPACT_FILES},
+    ),
+}
+
+
+def _resolve_index(control, table: str) -> tuple[str, int, str]:
+    """(physical table, generation, codec) of the current generation.
+    The codec is recorded in the pointer by the generation-1 build; an
+    unpublished index (generation 0) and a pointer without the field are
+    IVFPQ (they predate the field)."""
+    art = current_index_generation(control, table)
+    if art is None:
+        return table, 0, "ivfpq"
+    return art["physical"], int(art["generation"]), art.get("codec", "ivfpq")
+
+
 def resolve_index_table(control, table: str = "ivfpq_index") -> tuple[str, int]:
     """(physical table, generation) a reader should use NOW.  An index
     never published through the log resolves to its plain name as
     generation 0 (pre-versioning compatibility)."""
-    art = current_index_generation(control, table)
-    if art is None:
-        return table, 0
-    return art["physical"], int(art["generation"])
+    phys, gen, _codec = _resolve_index(control, table)
+    return phys, gen
+
+
+def _publish_generation(
+    emb: DataFrame, wh, control, table: str, gen: int, codec: str, **geometry
+) -> dict:
+    """Build generation ``gen`` under its physical name, THEN publish the
+    pointer (carrying the codec) — a reader never resolves to a
+    half-built generation."""
+    phys = _index_physical(table, gen)
+    _CODECS[codec].build(emb, wh, table=phys, **geometry)
+    control.put_artifact(
+        ANN_INDEX_KIND, table, {"generation": gen, "physical": phys, "codec": codec}
+    )
+    return {"generation": gen, "physical": phys}
 
 
 def build_ivfpq_versioned(
@@ -4795,14 +4782,19 @@ def build_ivfpq_versioned(
     k_clusters: int = N_CLUSTERS,
     m: int | None = None,
     k_codes: int | None = None,
+    *,
+    codec: str = "ivfpq",
 ) -> dict:
-    """Generation-1 build of a versioned IVFPQ index: the physical
-    tables land first, THEN the pointer publishes — a reader never
-    resolves to a half-built generation."""
-    phys = _index_physical(table, 1)
-    build_ivfpq_index(emb, wh, table=phys, k_clusters=k_clusters, m=m, k_codes=k_codes)
-    control.put_artifact(ANN_INDEX_KIND, table, {"generation": 1, "physical": phys})
-    return {"generation": 1, "physical": phys}
+    """Generation-1 build of a versioned ANN index: the physical tables
+    land first, THEN the pointer publishes.  ``codec`` ("ivfpq", or
+    "pq" for the plain code table — ``k_clusters`` unused) is named only
+    here: the pointer records it, and every later refit, append, query,
+    compact and maintenance turn reads it from there."""
+    if codec not in _CODECS:
+        raise ValueError(f"unknown index codec {codec!r}; one of {sorted(_CODECS)}")
+    return _publish_generation(
+        emb, wh, control, table, 1, codec, k_clusters=k_clusters, m=m, k_codes=k_codes
+    )
 
 
 def ivfpq_refit(
@@ -4816,27 +4808,23 @@ def ivfpq_refit(
     k_codes: int | None = None,
     keep_generations: int = 1,
 ) -> dict:
-    """Act on ``refit_recommended``: train NEW quantizers on the grown
-    corpus, re-encode it into generation g+1 beside the live index,
-    atomically repoint 'current' (one artifact append through the
-    control store's tmp+replace flush — readers see old or new wholly,
-    never a mix), then expire superseded generations.  Queries keep
-    answering against generation g for the entire refit; the swap costs
-    one pointer read.  Returns the new pointer plus the generations
-    reaped."""
-    _, cur_gen = resolve_index_table(control, table)
-    gen = cur_gen + 1
-    phys = _index_physical(table, gen)
-    build_ivfpq_index(
-        emb_full, wh, table=phys, k_clusters=k_clusters, m=m, k_codes=k_codes
+    """Act on ``refit_recommended``: train NEW quantizers (of the
+    current generation's codec) on the grown corpus, re-encode it into
+    generation g+1 beside the live index, atomically repoint 'current'
+    (one artifact append through the control store's tmp+replace flush
+    — readers see old or new wholly, never a mix), then expire
+    superseded generations.  Queries keep answering against generation
+    g for the entire refit; the swap costs one pointer read.  Returns
+    the new pointer plus the generations reaped."""
+    _, cur_gen, codec = _resolve_index(control, table)
+    out = _publish_generation(  # THE swap
+        emb_full, wh, control, table, cur_gen + 1, codec,
+        k_clusters=k_clusters, m=m, k_codes=k_codes,
     )
-    control.put_artifact(
-        ANN_INDEX_KIND, table, {"generation": gen, "physical": phys}
-    )  # THE swap
-    reaped = expire_index_generations(
+    out["expired"] = expire_index_generations(
         wh, control, table, keep_last=keep_generations
     )
-    return {"generation": gen, "physical": phys, "expired": reaped}
+    return out
 
 
 def expire_index_generations(
@@ -4870,12 +4858,12 @@ def ivfpq_append_current(
     batch_id: str | None = None,
     drift_refit_ratio: float = 2.0,
 ) -> dict:
-    """``ivfpq_append`` routed through the generation pointer: new
-    vectors land in whichever generation is current, and the report
-    carries that generation so an orchestrator can act on
-    ``refit_recommended`` with ``ivfpq_refit``."""
-    phys, gen = resolve_index_table(control, table)
-    rep = ivfpq_append(
+    """The codec's append (``ivfpq_append`` / ``pq_append``) routed
+    through the generation pointer: new vectors land in whichever
+    generation is current, and the report carries that generation so an
+    orchestrator can act on ``refit_recommended`` with ``ivfpq_refit``."""
+    phys, gen, codec = _resolve_index(control, table)
+    rep = _CODECS[codec].append(
         emb_new, wh, table=phys, batch_id=batch_id,
         drift_refit_ratio=drift_refit_ratio,
     )
@@ -4893,11 +4881,12 @@ def ivfpq_topk_current(
     nprobe: int = N_PROBE,
     rerank: int = IVFPQ_RERANK,
 ) -> DataFrame:
-    """Query through the generation pointer; the answering generation
-    rides in-band so a result can always be traced to the index version
-    that produced it."""
-    phys, gen = resolve_index_table(control, table)
-    res = ivfpq_topk_persisted(
+    """Query through the generation pointer with the codec's persisted
+    query (``nprobe`` is IVFPQ-only); the answering generation rides
+    in-band so a result can always be traced to the index version that
+    produced it."""
+    phys, gen, codec = _resolve_index(control, table)
+    res = _CODECS[codec].topk(
         wh, emb, queries, table=phys, k=k, nprobe=nprobe, rerank=rerank
     )
     return res.withColumn("index_generation", F.lit(int(gen)))
@@ -4911,18 +4900,19 @@ INDEX_COMPACT_AFTER_BATCHES = 8
 
 
 def ivfpq_compact(wh, control, table: str = "ivfpq_index") -> dict:
-    """Bin-pack the CURRENT generation's postings.  Every
-    ``ivfpq_append`` commits one more ``ingest_batch=`` dir, so after k
-    appends a probe opens O(k) parquet files per probed label partition
-    — at index scale the file listing, not the code bytes, becomes the
-    query cost.  ``rewrite_compact_files(partition_by=["label"])``
-    collapses the history to ~one file per label dir; quantizers, the
-    generation pointer, and query results are untouched (result
-    identity pinned in tests/test_pq.py).  Safe beside concurrent
-    appends — the rewrite replaces only the batches it read."""
-    phys, gen = resolve_index_table(control, table)
+    """Bin-pack the CURRENT generation's postings.  Every append commits
+    one more ``ingest_batch=`` dir, so after k appends a probe opens
+    O(k) parquet files per probed label partition — at index scale the
+    file listing, not the code bytes, becomes the query cost.
+    ``rewrite_compact_files`` collapses the history to ~one file per
+    label dir (IVFPQ) or to ``PQ_COMPACT_FILES`` files (plain PQ);
+    quantizers, the generation pointer, and query results are untouched
+    (result identity pinned in tests/test_pq.py).  Safe beside
+    concurrent appends — the rewrite replaces only the batches it
+    read."""
+    phys, gen, codec = _resolve_index(control, table)
     before = len(wh.data_files(phys))
-    wh.rewrite_compact_files(phys, partition_by=["label"])
+    wh.rewrite_compact_files(phys, **_CODECS[codec].compact)
     return {
         "generation": gen,
         "physical": phys,
@@ -4943,13 +4933,13 @@ def maintain_index(
     compact_after: int = INDEX_COMPACT_AFTER_BATCHES,
     refit_kwargs: dict | None = None,
 ) -> dict:
-    """One hands-free maintenance turn for a versioned IVFPQ index —
-    the orchestration that closes the loop the drift instrument opened:
-    append the batch through the current generation; if the report says
-    ``refit_recommended`` AND the caller supplied the grown corpus
-    (``emb_full``), run ``ivfpq_refit`` (new quantizers, re-encode,
-    atomic pointer swap); otherwise, once the generation's committed
-    batch history passes ``compact_after``, bin-pack the postings
+    """One hands-free maintenance turn for a versioned index of either
+    codec — the orchestration that closes the loop the drift instrument
+    opened: append the batch through the current generation; if the
+    report says ``refit_recommended`` AND the caller supplied the grown
+    corpus (``emb_full``), run ``ivfpq_refit`` (new quantizers,
+    re-encode, atomic pointer swap); otherwise, once the generation's
+    committed batch history passes ``compact_after``, bin-pack it
     (``ivfpq_compact``).  Exactly one heavy action per turn — a refit
     re-encodes everything anyway, so compaction after it is moot.
 
@@ -4981,149 +4971,6 @@ def maintain_index(
         phys, _gen = resolve_index_table(control, table)
         if len(wh.snapshots(phys)) > compact_after:
             rep["compact_report"] = ivfpq_compact(wh, control, table=table)
-            actions.append("compact")
-    rep["actions"] = actions
-    return rep
-
-
-# --- plain-PQ twins of the versioned lifecycle --------------------------
-# pq_append carries the same drift instrument as ivfpq_append, so the
-# plain index deserves the same machinery acting on it.  The generation/
-# pointer/expiry primitives above are already family-agnostic (physical
-# names + the artifact log); these twins just route them through
-# build_pq_index / pq_append / pq_topk_persisted.  Lifecycle pins live
-# beside the IVFPQ ones in tests/test_pq.py; no separate gate entry —
-# the machinery under test is LINE-IDENTICAL to the gate-verified IVFPQ
-# path, only the build/query callables differ.
-
-
-def build_pq_versioned(
-    emb: DataFrame,
-    wh,
-    control,
-    table: str = "pq_index",
-    m: int | None = None,
-    k_codes: int | None = None,
-) -> dict:
-    """Generation-1 build of a versioned plain-PQ index — tables land
-    first, then the pointer publishes (the ``build_ivfpq_versioned``
-    discipline)."""
-    phys = _index_physical(table, 1)
-    build_pq_index(emb, wh, table=phys, m=m, k_codes=k_codes)
-    control.put_artifact(ANN_INDEX_KIND, table, {"generation": 1, "physical": phys})
-    return {"generation": 1, "physical": phys}
-
-
-def pq_refit(
-    emb_full: DataFrame,
-    wh,
-    control,
-    table: str = "pq_index",
-    *,
-    m: int | None = None,
-    k_codes: int | None = None,
-    keep_generations: int = 1,
-) -> dict:
-    """``ivfpq_refit`` for the plain index: new codebooks on the grown
-    corpus, re-encode into generation g+1 beside live queries, one
-    atomic pointer swap, superseded generations expired."""
-    _, cur_gen = resolve_index_table(control, table)
-    gen = cur_gen + 1
-    phys = _index_physical(table, gen)
-    build_pq_index(emb_full, wh, table=phys, m=m, k_codes=k_codes)
-    control.put_artifact(
-        ANN_INDEX_KIND, table, {"generation": gen, "physical": phys}
-    )  # THE swap
-    reaped = expire_index_generations(
-        wh, control, table, keep_last=keep_generations
-    )
-    return {"generation": gen, "physical": phys, "expired": reaped}
-
-
-def pq_append_current(
-    emb_new: DataFrame,
-    wh,
-    control,
-    table: str = "pq_index",
-    *,
-    batch_id: str | None = None,
-    drift_refit_ratio: float = 2.0,
-) -> dict:
-    """``pq_append`` routed through the generation pointer."""
-    phys, gen = resolve_index_table(control, table)
-    rep = pq_append(
-        emb_new, wh, table=phys, batch_id=batch_id,
-        drift_refit_ratio=drift_refit_ratio,
-    )
-    rep["generation"] = gen
-    return rep
-
-
-def pq_topk_current(
-    wh,
-    control,
-    emb: DataFrame,
-    queries: DataFrame,
-    table: str = "pq_index",
-    k: int = TOP_K,
-    rerank: int = PQ_RERANK,
-) -> DataFrame:
-    """Query the plain index through the generation pointer; the
-    answering generation rides in-band."""
-    phys, gen = resolve_index_table(control, table)
-    res = pq_topk_persisted(wh, emb, queries, table=phys, k=k, rerank=rerank)
-    return res.withColumn("index_generation", F.lit(int(gen)))
-
-
-def pq_compact(wh, control, table: str = "pq_index", n_files: int = 16) -> dict:
-    """Bin-pack the CURRENT generation's code table.  The plain index
-    has no label partitioning — the ADC scan reads the whole table — so
-    the bound is a flat file count: after k appends the scan opens
-    O(k) files; the rewrite collapses them to ``n_files``."""
-    phys, gen = resolve_index_table(control, table)
-    before = len(wh.data_files(phys))
-    wh.rewrite_compact_files(phys, n_files=n_files)
-    return {
-        "generation": gen,
-        "physical": phys,
-        "files_before": before,
-        "files_after": len(wh.data_files(phys)),
-    }
-
-
-def maintain_pq_index(
-    emb_new: DataFrame,
-    wh,
-    control,
-    table: str = "pq_index",
-    *,
-    batch_id: str | None = None,
-    drift_refit_ratio: float = 2.0,
-    emb_full: DataFrame | None = None,
-    compact_after: int = INDEX_COMPACT_AFTER_BATCHES,
-    refit_kwargs: dict | None = None,
-) -> dict:
-    """``maintain_index`` for the plain index — same turn contract:
-    append; refit-and-swap when drift fired and the grown corpus was
-    supplied; else bin-pack past ``compact_after`` committed batches.
-    Exactly one heavy action per turn."""
-    rep = pq_append_current(
-        emb_new,
-        wh,
-        control,
-        table=table,
-        batch_id=batch_id,
-        drift_refit_ratio=drift_refit_ratio,
-    )
-    actions: list[str] = []
-    if rep.get("refit_recommended") and emb_full is not None:
-        sw = pq_refit(emb_full, wh, control, table=table, **(refit_kwargs or {}))
-        rep["generation"] = sw["generation"]
-        actions.append("refit")
-    else:
-        phys, _gen = resolve_index_table(control, table)
-        if len(wh.snapshots(phys)) > compact_after:
-            rep["compact_report"] = pq_compact(wh, control, table=table)
             actions.append("compact")
     rep["actions"] = actions
     return rep

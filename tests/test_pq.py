@@ -692,18 +692,14 @@ def test_codebook_memo_fit_once_and_identical(spark, sf_dir, monkeypatch):
     n = emb.count()
     half = emb.filter(F.col("vec_id") < n // 2)
     calls = {"pq": 0, "res": 0}
-    real_pq, real_res = sim.fit_pq_codebooks, sim.fit_residual_codebooks
+    real_fit = sim.fit_pq_codebooks
 
-    def spy_pq(*a, **kw):
-        calls["pq"] += 1
-        return real_pq(*a, **kw)
+    def spy_fit(*a, **kw):
+        # plain and residual fits are one function: count them by cents
+        calls["pq" if kw.get("cents") is None else "res"] += 1
+        return real_fit(*a, **kw)
 
-    def spy_res(*a, **kw):
-        calls["res"] += 1
-        return real_res(*a, **kw)
-
-    monkeypatch.setattr(sim, "fit_pq_codebooks", spy_pq)
-    monkeypatch.setattr(sim, "fit_residual_codebooks", spy_res)
+    monkeypatch.setattr(sim, "fit_pq_codebooks", spy_fit)
     sim._PQBOOK_ARTIFACTS.clear()
 
     b1 = sim.pq_codebooks_memo(emb, PQ_M, PQ_K)
@@ -924,19 +920,19 @@ def test_maintain_index_refits_on_drift(spark):
 
 
 def test_pq_versioned_lifecycle_and_swap_identity(spark, sf_dir):
-    """Plain-PQ twin of the versioned lifecycle: build gen-1 on half the
-    corpus, append the rest through the pointer, pq_refit on the full
-    corpus — gen-2, atomic swap, gen-1 expired — and the post-swap
-    queries answer exactly like a one-shot build on the same corpus
-    (deterministic memoized fits)."""
+    """The versioned lifecycle on the plain-PQ codec: build gen-1 on half
+    the corpus with codec="pq", append the rest through the pointer,
+    refit on the full corpus — gen-2, atomic swap, gen-1 expired — and
+    the post-swap queries answer exactly like a one-shot build on the
+    same corpus (deterministic memoized fits)."""
     import os
 
     from priority_data_pipeline_postgres_db_spark.operators.similarity import (
+        build_ivfpq_versioned,
         build_pq_index,
-        build_pq_versioned,
-        pq_append_current,
-        pq_refit,
-        pq_topk_current,
+        ivfpq_append_current,
+        ivfpq_refit,
+        ivfpq_topk_current,
         pq_topk_persisted,
         resolve_index_table,
     )
@@ -952,18 +948,21 @@ def test_pq_versioned_lifecycle_and_swap_identity(spark, sf_dir):
     control = ControlStore(os.path.join(root, "ctl.json"))
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
 
-    build_pq_versioned(emb.filter(F.col("vec_id") < n // 2), wh, control)
+    build_ivfpq_versioned(
+        emb.filter(F.col("vec_id") < n // 2), wh, control, table="pq_index", codec="pq"
+    )
     assert resolve_index_table(control, "pq_index") == ("pq_index__g0001", 1)
-    rep = pq_append_current(
-        emb.filter(F.col("vec_id") >= n // 2), wh, control, batch_id="g1"
+    rep = ivfpq_append_current(
+        emb.filter(F.col("vec_id") >= n // 2), wh, control, table="pq_index",
+        batch_id="g1",
     )
     assert rep["generation"] == 1 and rep["codes_written"] > 0
 
-    out = pq_refit(emb, wh, control)
+    out = ivfpq_refit(emb, wh, control, table="pq_index")
     assert out["generation"] == 2 and out["expired"] == ["pq_index__g0001"]
     assert not wh.exists("pq_index__g0001")
     post = (
-        pq_topk_current(wh, control, emb, queries, k=5)
+        ivfpq_topk_current(wh, control, emb, queries, table="pq_index", k=5)
         .orderBy("query_id", "rank")
         .toPandas()
     )
@@ -980,15 +979,15 @@ def test_pq_versioned_lifecycle_and_swap_identity(spark, sf_dir):
 
 
 def test_maintain_pq_index_compacts_and_refits(spark, sf_dir):
-    """maintain_pq_index mirrors the IVFPQ turn contract: bin-pack past
-    compact_after on the fixture corpus (drift never fires), and
-    refit-and-swap when the drift instrument fires on the clustered
-    synthetic with the grown corpus supplied."""
+    """maintain_index on a plain-PQ index keeps the IVFPQ turn contract:
+    bin-pack past compact_after on the fixture corpus (drift never
+    fires), and refit-and-swap when the drift instrument fires on the
+    clustered synthetic with the grown corpus supplied."""
     import os
 
     from priority_data_pipeline_postgres_db_spark.operators.similarity import (
-        build_pq_versioned,
-        maintain_pq_index,
+        build_ivfpq_versioned,
+        maintain_index,
         resolve_index_table,
     )
     from priority_data_pipeline_postgres_db_spark.operators.staging import (
@@ -1001,17 +1000,20 @@ def test_maintain_pq_index_compacts_and_refits(spark, sf_dir):
     root = scratch_dir("spark_graft_pq_maint_")
     wh = StagingWarehouse(spark, root)
     control = ControlStore(os.path.join(root, "ctl.json"))
-    build_pq_versioned(emb.filter(F.col("vec_id") < n // 2), wh, control)
+    build_ivfpq_versioned(
+        emb.filter(F.col("vec_id") < n // 2), wh, control, table="pq_index", codec="pq"
+    )
     phys, _ = resolve_index_table(control, "pq_index")
     step = max((n - n // 2) // 3, 1)
     acts = []
     for i in range(3):
         lo = n // 2 + i * step
         hi = n if i == 2 else n // 2 + (i + 1) * step
-        rep = maintain_pq_index(
+        rep = maintain_index(
             emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
             wh,
             control,
+            table="pq_index",
             batch_id=f"turn-{i}",
             compact_after=2,
         )
@@ -1041,11 +1043,14 @@ def test_maintain_pq_index_compacts_and_refits(spark, sf_dir):
     root2 = scratch_dir("spark_graft_pq_maint_drift_")
     wh2 = StagingWarehouse(spark, root2)
     control2 = ControlStore(os.path.join(root2, "ctl.json"))
-    build_pq_versioned(train, wh2, control2, m=4, k_codes=8)
-    rep = maintain_pq_index(
+    build_ivfpq_versioned(
+        train, wh2, control2, table="pq_index", m=4, k_codes=8, codec="pq"
+    )
+    rep = maintain_index(
         drifted,
         wh2,
         control2,
+        table="pq_index",
         batch_id="shifted",
         emb_full=train.unionByName(drifted),
         compact_after=0,
@@ -1053,3 +1058,85 @@ def test_maintain_pq_index_compacts_and_refits(spark, sf_dir):
     assert rep["refit_recommended"], rep
     assert rep["actions"] == ["refit"]
     assert resolve_index_table(control2, "pq_index") == ("pq_index__g0002", 2)
+
+
+def test_two_codecs_one_control_store_keep_their_layout(spark, sf_dir):
+    """One ControlStore, two versioned indexes on the single lifecycle:
+    IVFPQ under "ivfpq_index", plain PQ under "pq_index".  The codec
+    named at the generation-1 build rides the pointer, so a refit and a
+    compacting maintain_index turn keep each index's own layout —
+    label-partitioned postings plus centroids for IVFPQ, a flat code
+    table for PQ — and the refit generation answers exactly like a
+    one-shot build of its codec."""
+    import os
+
+    from priority_data_pipeline_postgres_db_spark.operators.similarity import (
+        ANN_INDEX_KIND,
+        PQ_COMPACT_FILES,
+        _resolve_index,
+        build_ivfpq_index,
+        build_ivfpq_versioned,
+        current_index_generation,
+        ivfpq_refit,
+        ivfpq_topk_current,
+        ivfpq_topk_persisted,
+        maintain_index,
+        resolve_index_table,
+    )
+    from priority_data_pipeline_postgres_db_spark.operators.staging import (
+        StagingWarehouse,
+    )
+    from priority_data_pipeline_postgres_db_spark.sources.control import ControlStore
+
+    emb = _emb(spark, sf_dir)
+    n = emb.count()
+    root = scratch_dir("spark_graft_two_codecs_")
+    wh = StagingWarehouse(spark, root)
+    control = ControlStore(os.path.join(root, "ctl.json"))
+    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    grown = emb.filter(F.col("vec_id") < 3 * n // 4)
+    rest = emb.filter(F.col("vec_id") >= 3 * n // 4)
+    cols = ["query_id", "neighbor_id", "rank"]
+
+    build_ivfpq_versioned(emb.filter(F.col("vec_id") < n // 2), wh, control)
+    build_ivfpq_versioned(
+        emb.filter(F.col("vec_id") < n // 2), wh, control, table="pq_index", codec="pq"
+    )
+    codecs = (
+        ("ivfpq_index", "ivfpq", build_ivfpq_index, ivfpq_topk_persisted, "postings_written"),
+        ("pq_index", "pq", build_pq_index, pq_topk_persisted, "codes_written"),
+    )
+    for table, codec, build_one_shot, topk_persisted, written in codecs:
+        out = ivfpq_refit(grown, wh, control, table=table)
+        assert out["generation"] == 2 and out["expired"] == [f"{table}__g0001"]
+        assert current_index_generation(control, table)["codec"] == codec
+        post = (
+            ivfpq_topk_current(wh, control, emb, queries, table=table, k=5)
+            .orderBy("query_id", "rank")
+            .toPandas()
+        )
+        assert set(post["index_generation"]) == {2}
+        wh1 = StagingWarehouse(spark, scratch_dir(f"spark_graft_two_codecs_{codec}_"))
+        build_one_shot(grown, wh1)
+        want = (
+            topk_persisted(wh1, emb, queries, k=5).orderBy("query_id", "rank").toPandas()
+        )
+        assert post[cols].values.tolist() == want[cols].values.tolist()
+
+        rep = maintain_index(rest, wh, control, table=table, batch_id="turn", compact_after=1)
+        assert rep["actions"] == ["compact"] and rep["generation"] == 2
+        assert rep[written] > 0
+        assert current_index_generation(control, table)["codec"] == codec
+
+    # each index kept its own layout through refit and compaction
+    ivf_phys, _ = resolve_index_table(control, "ivfpq_index")
+    pq_phys, _ = resolve_index_table(control, "pq_index")
+    assert all("/label=" in f for f in wh.data_files(ivf_phys))
+    assert wh.exists(f"{ivf_phys}_centroids")
+    assert not any("/label=" in f for f in wh.data_files(pq_phys))
+    assert not wh.exists(f"{pq_phys}_centroids")
+    assert len(wh.data_files(pq_phys)) <= PQ_COMPACT_FILES
+    assert wh.read(pq_phys).columns == ["vec_id", "codes"]
+    # a pointer published before the codec field existed reads as IVFPQ
+    control.put_artifact(ANN_INDEX_KIND, "legacy", {"generation": 1, "physical": "x"})
+    assert _resolve_index(control, "legacy") == ("x", 1, "ivfpq")

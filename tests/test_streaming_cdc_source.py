@@ -138,6 +138,27 @@ def test_offset_below_retention_horizon_raises(spark, tmp_path):
     )
 
 
+def test_latest_offset_never_moves_backwards(spark, tmp_path):
+    """latestOffset is a high-water mark: it never reports an offset
+    below the retention horizon once no change batch is left above it,
+    nor below ``startafter`` when the stream starts past the newest
+    batch."""
+    wh = _src(spark, tmp_path, n_batches=2)
+    wh.expire_snapshots("feed", keep_last=1, reap_min_age_sec=0.0)
+    # b0 is folded into the retention base; deleting every row of b1
+    # drops that batch, so only the base is left — at the horizon b0
+    wh.delete_rows("feed", [("k", ">=", 10)])
+    assert [b for b in wh.snapshots("feed") if b.startswith("b")] == ["b0~base"]
+    opts = {"root": str(tmp_path), "account": "cdc", "table": "feed"}
+    schema = spark.createDataFrame([], DDL).schema
+    reader = StagingChangesStreamReader(schema, opts)
+    assert reader.latestOffset() == {"last": "b0"}
+    assert reader.partitions({"last": "b0"}, reader.latestOffset()) == []
+
+    ahead = StagingChangesStreamReader(schema, {**opts, "startafter": "b9"})
+    assert ahead.latestOffset() == ahead.initialOffset() == {"last": "b9"}
+
+
 def test_schema_inference_from_batch_footer(spark, tmp_path):
     """Without a user schema, the source infers from the newest batch's
     parquet footer and appends _change_type."""
